@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.Fixtures
 
 /** One raw product record as a paginated upstream API returns it —
-  * pre-identity (the UPC is synthesized downstream in the pipeline). */
-case class RawProduct(partkey: Long, name: String, brand: String, price: Double)
+  * pre-identity (the UPC is synthesized downstream in the pipeline). A
+  * missing upstream price is `None`, which validation quarantines as
+  * `bad_price`, the same as a null price on the batch path. */
+case class RawProduct(partkey: Long, name: String, brand: String, price: Option[Double])
 
 /** A paginated record source — the shape of the reference's literal core
   * act (page through an HTTP product API, load each page). An API client is
@@ -56,7 +58,10 @@ class FixturePagedSource(spark: SparkSession, sfDir: String, pageSize: Int) exte
             col("p_brand").cast("string"),
             col("p_retailprice").cast("double"))
           .collect()
-          .map(r => RawProduct(r.getLong(0), r.getString(1), r.getString(2), r.getDouble(3)))
+          .map { r =>
+            val price = if (r.isNullAt(3)) None else Some(r.getDouble(3))
+            RawProduct(r.getLong(0), r.getString(1), r.getString(2), price)
+          }
           .toSeq)
   }
 }

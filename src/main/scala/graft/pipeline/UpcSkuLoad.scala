@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import java.util.Properties
-
 import graft.Fixtures
 import graft.sinks.JdbcSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,18 +14,30 @@ import org.apache.spark.sql.functions._
   * re-running is a no-op, changed rows update in place.
   */
 object UpcSkuLoad {
-  /** Raw (partkey, name, brand, price) rows → UPC product records. Check
-    * digit via pure column arithmetic (codegen-friendly; the UDF variant
-    * lives in ops.Scalars). Shared by the batch extract and the paginated
-    * path, so both synthesize identity identically. */
+  /** 10^11: a partkey needs at most 11 digits to fit the UPC body. */
+  private val BodyLimit = 100000000000L
+
+  /** Raw (partkey, name, brand, price) rows → UPC product records. Shared
+    * by the batch extract and the paginated path, so both synthesize
+    * identity identically.
+    *
+    * The check digit is integer arithmetic on the key (digit i of the body
+    * is `pmod(floor(k / 10^(11-i)), 10)`), not substrings of the padded
+    * string: `validate`'s filters are pushed through this projection with
+    * `upc` inlined into each reference, so every node here is repeated per
+    * reference downstream. A key outside [0, 10^11) has no 11-digit body;
+    * its `upc` is null, which quarantines it as `bad_length` instead of
+    * truncating it onto another key's UPC (or, for a negative key, throwing
+    * out of the job under ANSI casts). */
   def toProducts(raw: DataFrame): DataFrame = {
-    val body = lpad(col("partkey").cast("string"), 11, "0")
+    val key = col("partkey").cast("long")
     val weighted = (1 to 11)
-      .map(i => substring(body, i, 1).cast("int") * lit(if (i % 2 == 1) 3 else 1))
+      .map(i => pmod(floor(key / lit(math.pow(10, 11 - i))), lit(10L)) * lit(if (i % 2 == 1) 3 else 1))
       .reduce(_ + _)
     val cd = (lit(10) - weighted % 10) % 10
     raw.select(
-      concat(body, cd.cast("string")).as("upc"),
+      when(key >= 0 && key < BodyLimit, concat(lpad(key.cast("string"), 11, "0"), cd.cast("string")))
+        .as("upc"),
       col("name"),
       col("brand"),
       col("price"),
@@ -51,34 +61,31 @@ object UpcSkuLoad {
   def validate(records: DataFrame): DataFrame =
     validateWithQuarantine(records)._1
 
+  /** The UPC-A weighted digit sum of a 12-character code (odd 1-based
+    * positions weigh 3), or null when the code is null, not 12 characters
+    * long, or holds a non-digit. One call checks all 12 digits, so the
+    * validation plan holds one node per reference to it, not 12 substring
+    * terms (which, with `upc` inlined into each, grew into thousands of
+    * nodes and a filter too large for the JIT). */
+  private val upcWeightedSum = udf { (upc: String) =>
+    if (upc == null || upc.length != 12 || !upc.forall(c => c >= '0' && c <= '9')) null
+    else Int.box((0 until 12).foldLeft(0)((sum, i) => sum + (upc.charAt(i) - '0') * (if (i % 2 == 0) 3 else 1)))
+  }
+
   /** Split records into (valid, quarantined): every rejected row lands in
     * the second frame carrying its FIRST failing check as `reject_reason`
-    * (fixed evaluation order, so reasons are deterministic). The null
-    * traps matter: a non-digit character makes the weighted sum NULL and a
-    * bare `sum % 10 =!= 0` predicate would be NULL too — neither valid nor
-    * flagged — so every reason clause is written null-catching. Single
-    * pass, pure column expressions; the split is two filters over the same
-    * tagged plan (Spark shares the scan). */
+    * (fixed evaluation order, so reasons are deterministic). Every clause
+    * catches nulls (the UPC ones with `<=>`): a null `upc` or a null
+    * weighted sum must flag the row, not make the reason itself null and
+    * leak it into neither frame. Malformed input is data here, never an
+    * exception. The split is two filters over the same tagged plan (Spark
+    * shares the scan). */
   def validateWithQuarantine(records: DataFrame): (DataFrame, DataFrame) = {
-    // try_cast, not cast: under ANSI mode (Spark 4 default) a non-digit
-    // character would THROW out of the whole job — the quarantine path
-    // exists precisely to absorb malformed input as data, not exceptions
-    val weighted = (1 to 12)
-      .map(i => expr(s"try_cast(substring(upc, $i, 1) AS int)") * lit(if (i % 2 == 1) 3 else 1))
-      .reduce(_ + _)
-    // The 12-term sum is projected ONCE as a named column, not inlined into
-    // the `when` clauses: inlined twice it doubled the expression tree and
-    // pushed the downstream validate→dedup→agg stage past the JVM's 64 KB
-    // method limit, silently dropping the whole stage out of codegen
-    // (CollapseProject keeps this split — the alias is non-cheap and
-    // referenced twice, so Catalyst won't re-inline it).
-    val withW = records.withColumn("__cd_weighted", weighted)
-    val w = col("__cd_weighted")
-    val reason = when(col("upc").isNull || length(col("upc")) =!= 12, "bad_length")
-      .when(w.isNull || w % 10 =!= 0, "bad_check_digit")
+    val reason = when(!(length(col("upc")) <=> 12), "bad_length")
+      .when(!(upcWeightedSum(col("upc")) % 10 <=> 0), "bad_check_digit")
       .when(col("price").isNull || col("price") <= 0, "bad_price")
       .when(length(trim(coalesce(col("name"), lit("")))) === 0, "empty_name")
-    val tagged = withW.withColumn("reject_reason", reason).drop("__cd_weighted")
+    val tagged = records.withColumn("reject_reason", reason)
     (
       tagged.filter(col("reject_reason").isNull).drop("reject_reason"),
       tagged.filter(col("reject_reason").isNotNull))
@@ -94,16 +101,15 @@ object UpcSkuLoad {
       .drop("rn")
   }
 
-  /** Load: idempotent keyed upsert (insert-new / update-changed). */
-  def load(records: DataFrame, url: String, table: String): Unit =
+  /** Load: idempotent keyed upsert (insert-new / update-changed). Returns
+    * the rows it consumed, counted by the upsert itself, so a caller that
+    * reports the count runs the transform once. */
+  def load(records: DataFrame, url: String, table: String): Long =
     JdbcSink.upsert(records, url, table, keyCols = Seq("upc"))
 
-  /** The whole reference-shaped run. */
-  def run(spark: SparkSession, sfDir: String, url: String, table: String): Long = {
-    val ready = dedup(validate(extract(spark, sfDir)))
-    load(ready, url, table)
-    ready.count()
-  }
+  /** The whole reference-shaped run. Returns the rows loaded. */
+  def run(spark: SparkSession, sfDir: String, url: String, table: String): Long =
+    load(dedup(validate(extract(spark, sfDir))), url, table)
 
   /** The reference's incremental consumption loop: walk a [[PagedSource]]
     * page by page, running the SAME validate→dedup→upsert per page. The
@@ -111,6 +117,11 @@ object UpcSkuLoad {
     * the keyed upsert makes page replay (crash recovery, overlapping
     * fetches) idempotent — EtlPipelineSpec proves page-wise consumption
     * lands the exact table the batch run does.
+    *
+    * Each page is one action: the upsert, which also counts the rows. The
+    * page is not cached: a cached plan keeps the shuffle width chosen
+    * before adaptive execution (hundreds of tasks for a 1,000-row page),
+    * while the uncached plan is coalesced to a handful.
     *
     * Dedup is PER PAGE: a consistent keyset-paginated snapshot yields each
     * key on exactly one page, so paged ≡ batch. If the upstream snapshot
@@ -126,14 +137,7 @@ object UpcSkuLoad {
     var total = 0L
     var batch = source.fetchPage(page)
     while (batch.isDefined) {
-      // cache: both the upsert and the count action consume `ready`; a
-      // page is small by construction, and without the cache the
-      // validate/dedup window shuffle runs twice per page
-      val ready = dedup(validate(toProducts(spark.createDataset(batch.get).toDF()))).cache()
-      try {
-        load(ready, url, table)
-        total += ready.count()
-      } finally ready.unpersist()
+      total += load(dedup(validate(toProducts(spark.createDataset(batch.get).toDF()))), url, table)
       page += 1
       batch = source.fetchPage(page)
     }

@@ -83,23 +83,27 @@ object JdbcSink {
 
   /** Idempotent upsert: rows whose key tuple exists are updated, others
     * inserted. Runs on the executors via foreachPartition; batches commit
-    * every `batchSize` rows. */
+    * every `batchSize` rows. Returns the number of rows consumed, counted
+    * by the write itself (an accumulator only merges successful tasks), so
+    * callers need no second action over `df` to learn it. */
   def upsert(
       df: DataFrame,
       url: String,
       table: String,
       keyCols: Seq[String],
       dialect: UpsertDialect = UpdateInsertDialect,
-      batchSize: Int = 500): Unit = {
+      batchSize: Int = 500): Long = {
     val schema = df.schema
     val valCols = schema.fieldNames.filterNot(keyCols.contains).toSeq
+    val consumed = df.sparkSession.sparkContext.longAccumulator
     df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
       if (rows.nonEmpty) {
         val conn = DriverManager.getConnection(url)
-        try writePartition(conn, rows, schema, table, keyCols, valCols, batchSize)
+        try consumed.add(writePartition(conn, rows, schema, table, keyCols, valCols, batchSize))
         finally conn.close()
       }
     }
+    consumed.value
   }
 
   /** Streaming incremental load — the reference's batch ETL modernized:
@@ -117,6 +121,7 @@ object JdbcSink {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         upsert(batch.toDF(), url, table, keyCols)
+        ()
       }
       .start()
 
@@ -300,7 +305,7 @@ object JdbcSink {
       table: String,
       keyCols: Seq[String],
       valCols: Seq[String],
-      batchSize: Int): Unit = {
+      batchSize: Int): Long = {
     conn.setAutoCommit(false)
     val upd = conn.prepareStatement(updateSql(table, keyCols, valCols))
     val ins = conn.prepareStatement(insertSql(table, schema.fieldNames.toSeq))
@@ -318,8 +323,10 @@ object JdbcSink {
     //  - Drivers may return Statement.SUCCESS_NO_INFO (-2) from executeBatch
     //    (MySQL with rewriteBatchedStatements): the count is unknown, so fall
     //    back to a per-row executeUpdate for that row to learn it.
+    var consumed = 0L
     try {
       rows.grouped(batchSize).foreach { rawChunk =>
+        consumed += rawChunk.size
         val lastByKey = scala.collection.mutable.LinkedHashMap
           .empty[Seq[Any], org.apache.spark.sql.Row]
         // Normalize Array[Byte] key values (BINARY columns) to ArraySeq so
@@ -367,6 +374,7 @@ object JdbcSink {
         if (nIns > 0) ins.executeBatch()
         conn.commit()
       }
+      consumed
     } finally {
       upd.close()
       ins.close()

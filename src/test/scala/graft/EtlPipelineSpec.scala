@@ -14,16 +14,27 @@ class EtlPipelineSpec extends SparkSuite {
   private val url = "jdbc:derby:memory:etldb;create=true"
   private val table = "products_pipeline"
 
-  test("reference-shaped ETL: validated load, idempotent re-run, in-place update") {
+  /** (Re)create an empty products table named `t`. */
+  private def freshTable(t: String): Unit = {
     val c = DriverManager.getConnection(url)
     try {
       val st = c.createStatement()
-      try st.execute(s"DROP TABLE $table")
+      try st.execute(s"DROP TABLE $t")
       catch { case _: java.sql.SQLException => () }
       st.execute(
-        s"CREATE TABLE $table (upc CHAR(12) PRIMARY KEY, name VARCHAR(128), brand VARCHAR(32), price DOUBLE, loaded_at TIMESTAMP)")
+        s"CREATE TABLE $t (upc CHAR(12) PRIMARY KEY, name VARCHAR(128), brand VARCHAR(32), price DOUBLE, loaded_at TIMESTAMP)")
       st.close()
     } finally c.close()
+  }
+
+  private def snapshot(t: String) = spark.read.jdbc(url, t, new java.util.Properties())
+    .select("upc", "name", "brand", "price")
+    .collect()
+    .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3)))
+    .toSet
+
+  test("reference-shaped ETL: validated load, idempotent re-run, in-place update") {
+    freshTable(table)
 
     val n = UpcSkuLoad.run(spark, sf001, url, table)
     def loaded() = spark.read.jdbc(url, table, new java.util.Properties())
@@ -48,14 +59,10 @@ class EtlPipelineSpec extends SparkSuite {
       s"unexpected diff set: ${diffs.take(5)}")
 
     // validation actually rejects: corrupt check digits are filtered out.
-    // The corrupt frame is MATERIALIZED (localCheckpoint) before validate:
-    // in production corrupt input arrives from storage as plain columns, not
-    // as a third expression layer composed over extract's check-digit
-    // arithmetic — unmaterialized, predicate pushdown would inline the full
-    // 3-layer tower into one Filter and blow the 64 KB codegen method limit.
+    // Validate compiles over the composed three-layer plan (extract, the
+    // corruption, validate), with nothing materialized in between.
     val corrupted = UpcSkuLoad
       .extract(spark, sf001)
-      .localCheckpoint(true)
       .withColumn(
         "upc",
         concat(
@@ -66,15 +73,7 @@ class EtlPipelineSpec extends SparkSuite {
 
   test("paginated consumption lands the exact table the batch run does; page replay is a no-op") {
     val pagedTable = "products_paged"
-    val c = DriverManager.getConnection(url)
-    try {
-      val st = c.createStatement()
-      try st.execute(s"DROP TABLE $pagedTable")
-      catch { case _: java.sql.SQLException => () }
-      st.execute(
-        s"CREATE TABLE $pagedTable (upc CHAR(12) PRIMARY KEY, name VARCHAR(128), brand VARCHAR(32), price DOUBLE, loaded_at TIMESTAMP)")
-      st.close()
-    } finally c.close()
+    freshTable(pagedTable)
 
     // 37 never divides 200: the protocol must survive a partial last page
     val source = new graft.pipeline.FixturePagedSource(spark, sf001, pageSize = 37)
@@ -87,11 +86,6 @@ class EtlPipelineSpec extends SparkSuite {
 
     val n = UpcSkuLoad.runPaged(spark, source, url, pagedTable)
     assert(n == 200, s"expected all 200 parts across pages, got $n")
-    def snapshot(t: String) = spark.read.jdbc(url, t, new java.util.Properties())
-      .select("upc", "name", "brand", "price")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3)))
-      .toSet
     // batch table was loaded by the test above (same suite, same Derby db)
     assert(snapshot(pagedTable) == snapshot(table), "paged result differs from batch result")
 
@@ -107,22 +101,6 @@ class EtlPipelineSpec extends SparkSuite {
   test("adversarial paging: transient failures, permanent abort + resume, duplicate/stale/shrunken pages all converge") {
     import graft.pipeline.{PagedSource, RawProduct, RetryingPagedSource}
     val healthy = new graft.pipeline.FixturePagedSource(spark, sf001, pageSize = 37)
-    def freshTable(t: String): Unit = {
-      val c = DriverManager.getConnection(url)
-      try {
-        val st = c.createStatement()
-        try st.execute(s"DROP TABLE $t")
-        catch { case _: java.sql.SQLException => () }
-        st.execute(
-          s"CREATE TABLE $t (upc CHAR(12) PRIMARY KEY, name VARCHAR(128), brand VARCHAR(32), price DOUBLE, loaded_at TIMESTAMP)")
-        st.close()
-      } finally c.close()
-    }
-    def snapshot(t: String) = spark.read.jdbc(url, t, new java.util.Properties())
-      .select("upc", "name", "brand", "price")
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3)))
-      .toSet
     freshTable("adv_batch")
     UpcSkuLoad.run(spark, sf001, url, "adv_batch")
     val want = snapshot("adv_batch")
@@ -266,5 +244,99 @@ class EtlPipelineSpec extends SparkSuite {
       // the exact downstream shape that used to blow up: validate→dedup→agg
       assert(UpcSkuLoad.dedup(UpcSkuLoad.validate(UpcSkuLoad.extract(spark, sf001))).count() == 200)
     } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
+  test("partkeys outside [0, 10^11) quarantine as bad_length instead of truncating or throwing") {
+    import spark.implicits._
+    val raw = Seq(
+      (0L, "zero"),
+      (12345678901L, "eleven digits"),
+      (99999999999L, "largest body"),
+      (100000000000L, "ten to the eleventh"),
+      (123456789012L, "twelve digits"),
+      (123456789019L, "twelve digits too"),
+      (-7L, "negative")
+    ).toDF("partkey", "name").withColumn("brand", lit("B")).withColumn("price", lit(1.0))
+    val (valid, quarantined) = UpcSkuLoad.validateWithQuarantine(UpcSkuLoad.toProducts(raw))
+    val loaded = valid.select("name", "upc").collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(loaded == Map(
+      "zero" -> "000000000000",
+      "eleven digits" -> "123456789012",
+      "largest body" -> "999999999993"), s"got $loaded")
+    val rejected = quarantined.select("name", "upc", "reject_reason").collect()
+      .map(r => (r.getString(0), Option(r.getString(1)), r.getString(2))).toSet
+    assert(rejected == Set("ten to the eleventh", "twelve digits", "twelve digits too", "negative")
+      .map(n => (n, None, "bad_length")), s"got $rejected")
+  }
+
+  test("a null upstream price quarantines as bad_price on the paged path") {
+    import graft.pipeline.FixturePagedSource
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("etl-null-price").toString
+    // dense 0-based partkeys, like every fixture: keyset pages of 2
+    Seq((0L, "a", "B", Some(2.5)), (1L, "b", "B", None), (2L, "c", "B", Some(4.0)))
+      .toDF("p_partkey", "p_name", "p_brand", "p_retailprice")
+      .write.parquet(s"$dir/part.parquet")
+    val source = new FixturePagedSource(spark, dir, pageSize = 2)
+    val page = source.fetchPage(0).get
+    assert(page.map(_.price) == Seq(Some(2.5), None))
+    val (_, quarantined) = UpcSkuLoad.validateWithQuarantine(UpcSkuLoad.toProducts(spark.createDataset(page).toDF()))
+    assert(quarantined.select("name", "reject_reason").collect().map(r => r.getString(0) -> r.getString(1)).toSeq ==
+      Seq("b" -> "bad_price"))
+    freshTable("null_price_paged")
+    assert(UpcSkuLoad.runPaged(spark, source, url, "null_price_paged") == 2)
+    assert(snapshot("null_price_paged").map(_._2) == Set("a", "c"))
+  }
+
+  test("the transform's optimized plan stays small") {
+    // counted the way the benchmark counts it: every expression node of
+    // every operator in the optimized plan
+    val ready = UpcSkuLoad.dedup(UpcSkuLoad.validate(UpcSkuLoad.extract(spark, sf001)))
+    val nodes = ready.queryExecution.optimizedPlan
+      .collect { case n => n.expressions.map(_.collect { case e => e }.size).sum }
+      .sum
+    assert(nodes <= 1000, s"optimized plan holds $nodes expression nodes")
+  }
+
+  test("runPaged runs a handful of tasks per page under a wide initial shuffle") {
+    import graft.pipeline.{FixturePagedSource, PagedSource, RawProduct}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    // 200 parts in pages of 67: three pages, served from memory so only the
+    // transform and the upsert run Spark jobs
+    val fixture = new FixturePagedSource(spark, sf001, pageSize = 67)
+    val pages = Iterator.from(0).map(fixture.fetchPage).takeWhile(_.isDefined).map(_.get).toVector
+    assert(pages.size == 3)
+    val source = new PagedSource {
+      def fetchPage(p: Int): Option[Seq[RawProduct]] = pages.lift(p)
+    }
+    freshTable("tasks_paged")
+
+    // Listener events arrive asynchronously, in order. A one-task sentinel
+    // job before and after the walk brackets exactly the walk's tasks.
+    val sc = spark.sparkContext
+    val tasks = new java.util.concurrent.atomic.AtomicLong
+    val marks = new java.util.concurrent.LinkedBlockingQueue[java.lang.Long]
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("etl.sentinel") != null) marks.put(tasks.get)
+    }
+    def sentinel(): Long = {
+      sc.setLocalProperty("etl.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("etl.sentinel", null)
+      marks.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    sc.addSparkListener(listener)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "256")
+    try {
+      val before = sentinel()
+      assert(UpcSkuLoad.runPaged(spark, source, url, "tasks_paged") == 200)
+      val walked = sentinel() - before - 1 // minus the first sentinel's own task
+      assert(walked < 64 * pages.size, s"$walked tasks for ${pages.size} pages")
+    } finally {
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -49,7 +49,8 @@ class JdbcSinkSpec extends SparkSuite {
       (2L, "gadget", 24.99, t0),
       (4L, "doohickey", 5.0, t0)
     ).toDF("upc", "name", "price", "loaded_at")
-    JdbcSink.upsert(delta, url, table, keyCols = Seq("upc"))
+    // the upsert reports the rows it consumed, with no second action
+    assert(JdbcSink.upsert(delta, url, table, keyCols = Seq("upc")) == delta.count())
     val afterFirst = readBack().collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(afterFirst.size == 4)
     assert(afterFirst(2L) == 24.99)
