@@ -119,8 +119,8 @@ object Sources {
       snap(1).union(snap(2)).union(snap(3)).union(snap(4)).orderBy("version")
     },
     // Manifest-level DATA SKIPPING on the snapshot table: per-file min/max
-    // stats ride every commit (collected in the post-write validation scan
-    // the protocol already pays), compact() range-clusters on the predicate
+    // stats ride every commit (built by the data write itself, from the
+    // rows as they are written), compact() range-clusters on the predicate
     // column, and readWhere() plans the scan over only the files whose
     // recorded range can match — at 100 TB the driver never lists or
     // footer-probes dead files. The result is EXACTLY read-then-filter
@@ -651,8 +651,8 @@ object Sources {
     // EQUALITY point lookup through the manifest Bloom index: the probe
     // column is a 71-char string — past the 64-char min/max stat cap, so
     // range stats are blind to it and only the per-file bloom (m=4096,
-    // k=4, murmur3+xxhash64 double hashing, built inside the post-write
-    // stats scan) can prune. readWhere with lower==upper consults it; the
+    // k=4, murmur3+xxhash64 double hashing, built by the data write
+    // itself) can prune. readWhere with lower==upper consults it; the
     // result is EXACTLY read-then-filter (hash-checked here), and that the
     // bloom actually skips files — including on unclustered long keys
     // where [min,max] spans every file — is SnapshotTableSpec's job.

@@ -25,7 +25,9 @@ import org.apache.spark.sql.types.StructType
   *   1. Each task writes its partition of the epoch to a private staged
   *      parquet file under `<root>/_streamStaging/<queryId>/epoch=<id>/`
   *      via the codegen'd parquet [[OutputWriter]] (the same writer batch
-  *      plans use) and reports the file path + row count in its commit
+  *      plans use), builds the file's manifest stats from the rows as it
+  *      writes them ([[WriteStats]], the batch writer's kernel) and
+  *      reports the file path, row count and stats in its commit
   *      message. The queryId namespace keeps CONCURRENT streaming queries
   *      into the same table from touching each other's staged epochs
   *      (their epoch counters both start at 0), and the same id rides the
@@ -35,9 +37,9 @@ import org.apache.spark.sql.types.StructType
   *      attempts abort
   *      their own file; a file only exists for the commit once its task's
   *      message arrives.
-  *   2. `commit(epochId, messages)` re-frames exactly the reported files
-  *      as a DataFrame and lands it through the SAME exactly-once epoch
-  *      operators the path-based V1 sink uses
+  *   2. `commit(epochId, messages)` lands exactly the reported files
+  *      through the SAME exactly-once epoch operators the path-based V1
+  *      sink uses
   *      ([[SnapshotSinkOps.landBatch]] —
   *      [[SnapshotTable.appendBatchExactlyOnce]], or the keyed
   *      COW/MOR upsert with `.option("upsertKeys", …)` /
@@ -50,10 +52,14 @@ import org.apache.spark.sql.types.StructType
   *      age-gated [[SnapshotTable.vacuum]] reclaims abandoned epochs
   *      (a restarted query re-stages its replayed epoch from scratch).
   *
-  * The stage hop costs one extra write of the micro-batch (bounded by
-  * admission control, not table size) and buys the transactional path
-  * everything it already proves: stats + blooms, range clustering,
-  * CHECK constraints, schema evolution, and exactly-once replay. Complete
+  * A plain append ADOPTS the staged files by rename and publishes their
+  * reported stats — no Spark job after the epoch's own. Routes that must
+  * transform or check rows (upserts, range clustering, renamed columns,
+  * CHECK constraints) re-frame the files as a DataFrame, paying one extra
+  * write of the micro-batch (bounded by admission control, not table
+  * size) for everything the transactional path proves: stats + blooms,
+  * range clustering, CHECK constraints, schema evolution, and
+  * exactly-once replay. Complete
   * mode is refused, as on the path sink — a snapshot table's full-rewrite
   * analogue is `overwrite`, not a streaming epoch. Schema evolution: an
   * epoch that adds columns EVOLVES the table exactly like batch append
@@ -101,17 +107,17 @@ private[sinks] final class GraftStreamingWrite(
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val staged = messages.collect { case m: GraftStagedFile if m.rows > 0 => m.path }
+    val staged = messages.collect { case m: GraftStagedFile if m.stats.rows > 0 => m }
     val df =
       if (staged.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(staged.toIndexedSeq: _*)
+      else spark.read.schema(schema).parquet(staged.toIndexedSeq.map(_.path): _*)
     // the exactly-once contract does the rest: a replayed epoch finds its
     // (queryId, batchId) pair in the manifest and lands nothing — the
     // recorded appId keeps a SECOND query's identical epoch number from
     // deduping against ours (Delta's txn appId semantics). The staged
-    // paths ride along so the plain-append route can ADOPT the epoch's
-    // files by rename instead of writing every byte a second time.
+    // files and their stats ride along so the plain-append route can
+    // ADOPT them by rename instead of writing every byte a second time.
     SnapshotSinkOps.landBatch(
       spark, root, df, epochId, opts, appId = Some(queryId), staged = Some(staged.toIndexedSeq))
     dropEpochDir(epochId)
@@ -142,9 +148,10 @@ private[sinks] final class GraftStreamingWrite(
 /** Executor side: one staged parquet file per (partition, attempt), named
   * by task identity PLUS the per-run token so neither speculative attempts
   * nor a post-crash replay run collide; the commit message reports the
-  * finished file (commit() re-frames only reported files, so crashed-run
-  * debris in the same epoch dir is never read, and the post-publish
-  * dropEpochDir removes it with the dir). Zero-row writers stage nothing. */
+  * finished file and its stats (commit() lands only reported files, so
+  * crashed-run debris in the same epoch dir is never read, and the
+  * post-publish dropEpochDir removes it with the dir). Zero-row writers
+  * stage nothing. */
 private[sinks] final class GraftStreamingWriterFactory(
     owf: OutputWriterFactory,
     conf: SerializableHadoopConf,
@@ -157,7 +164,7 @@ private[sinks] final class GraftStreamingWriterFactory(
     new DataWriter[InternalRow] {
       private var writer: OutputWriter = _
       private var path: String = _
-      private var rows = 0L
+      private val stats = new WriteStats.FileAcc(WriteStats.Layout(schema))
 
       private def open(): Unit = {
         val ctx = new TaskAttemptContextImpl(
@@ -172,12 +179,13 @@ private[sinks] final class GraftStreamingWriterFactory(
       override def write(row: InternalRow): Unit = {
         if (writer == null) open()
         writer.write(row)
-        rows += 1
+        stats.add(row)
       }
 
       override def commit(): WriterCommitMessage = {
         if (writer != null) writer.close()
-        GraftStagedFile(if (path == null) "" else path, rows)
+        val p = if (path == null) "" else path
+        GraftStagedFile(p, stats.result(p.substring(p.lastIndexOf('/') + 1)))
       }
 
       override def abort(): Unit =
@@ -198,7 +206,7 @@ private[sinks] final class GraftStreamingWriterFactory(
     }
 }
 
-private[sinks] final case class GraftStagedFile(path: String, rows: Long)
+private[sinks] final case class GraftStagedFile(path: String, stats: RawFileStat)
     extends WriterCommitMessage
 
 /** Hadoop `Configuration` is not `java.io.Serializable`; this is the

@@ -654,13 +654,13 @@ private[sinks] object SnapshotSinkOps {
       // executor-staged parquet files of this epoch (DSv2 catalog sink):
       // the plain-append route then ADOPTS them by rename instead of
       // re-writing every byte — see appendStagedBatchExactlyOnce
-      staged: Option[Seq[String]] = None): Unit = {
+      staged: Option[Seq[GraftStagedFile]] = None): Unit = {
     import opts.{compactEvery, compactTargetBytes}
     opts.upsertKeys match {
       case None =>
         staged match {
-          case Some(paths) =>
-            SnapshotTable.appendStagedBatchExactlyOnce(spark, root, paths, df.schema, batchId, appId)
+          case Some(files) =>
+            SnapshotTable.appendStagedBatchExactlyOnce(spark, root, files, df.schema, batchId, appId)
           case None => SnapshotTable.appendBatchExactlyOnce(spark, root, df, batchId, appId)
         }
       case Some(ks) if opts.mor =>

@@ -221,10 +221,13 @@ object SnapshotTable {
     spark.conf.getOption("spark.graft.cdc.onWrite").forall(_.toBoolean)
 
   /** The key ENVELOPE of `df` — per-key min/max collapsed to prune
-    * [[Bound]]s (one tiny agg job; all-None bounds mean every value of
-    * that key was null, which matches nothing). Shared by every
-    * key-driven candidate prune: merge, merge-on-read, matched-delete,
-    * and rebase's merge replay. */
+    * [[Bound]]s by one aggregate job (all-None bounds mean every value of
+    * that key was null, which matches nothing). The key-driven candidate
+    * prunes whose source is not a freshly written dir use it:
+    * [[mergeInto]], matched-delete and rebase's merge replay; the upserts
+    * read their source's envelope from its write-time stats
+    * ([[statsEnvelope]]) and fall back to this only when those are
+    * incomplete. */
   private def keyEnvelope(df: DataFrame, keyCols: Seq[String]): Seq[Bound] = {
     import org.apache.spark.sql.functions.{col, max, min}
     val aggs = keyCols.flatMap(k =>
@@ -232,6 +235,48 @@ object SnapshotTable {
     val kb = df.agg(aggs.head, aggs.tail: _*).collect()(0)
     keyCols.map(k =>
       Bound(k, Option(kb.getAs[Any]("__lo_" + k)), Option(kb.getAs[Any]("__hi_" + k))))
+  }
+
+  /** The key envelope of a freshly written source dir from its
+    * write-time `stats` (PHYSICAL names; `schema` maps logical keys to
+    * them): per key, the least file min and the greatest file max under
+    * Spark's ordering, decoded to the values [[keyEnvelope]] would return
+    * — no Spark job. None when some non-empty file holds non-null values
+    * of a key with no recorded [min,max] (NaN, a string over 64 chars, an
+    * unstatable type): the caller then runs [[keyEnvelope]]. */
+  private def statsEnvelope(
+      stats: Seq[FileStat],
+      schema: org.apache.spark.sql.types.StructType,
+      keyCols: Seq[String]): Option[Seq[Bound]] = {
+    def cmp(a: JValue, b: JValue): Int = (a, b) match {
+      case (JString(x), JString(y)) =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(x)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
+      case _ => jNum(a).get.compare(jNum(b).get)
+    }
+    // per key: None when the stats cannot bound it (or the source lacks
+    // the key — keyEnvelope then reports that)
+    val perKey = keyCols.map { k =>
+      schema.fields.find(_.name == k).flatMap { f =>
+        val key = physName(f)
+        val ranges = stats.filter(_.rows > 0).flatMap { st =>
+          (st.min.get(key), st.max.get(key)) match {
+            case (Some(lo), Some(hi)) => Some(Some(lo -> hi))
+            case _ if st.nonNull.get(key).contains(0L) => None // all-null in this file
+            case _ => Some(None) // values without a stat: the envelope is unknown
+          }
+        }
+        if (ranges.contains(None)) None
+        else {
+          val rs = ranges.flatten
+          Some(MaskBound(
+            k,
+            rs.map(_._1).reduceOption((a, b) => if (cmp(b, a) < 0) b else a),
+            rs.map(_._2).reduceOption((a, b) => if (cmp(b, a) > 0) b else a)))
+        }
+      }
+    }
+    if (perKey.contains(None)) None else Some(decodeMaskBounds(schema, perKey.flatten))
   }
 
   /** Table schema of `next` committed over `prior`: same-named columns
@@ -1407,7 +1452,7 @@ object SnapshotTable {
       // (formerly d.isEmpty + d.count()) and the per-column envelope for
       // the candidate prune (columns with any null pre-image are excluded —
       // null-safe equality matches rows stats never see).
-      val statCols = merged.fields.filter(fd => statable(fd.dataType)).map(_.name).toSeq
+      val statCols = merged.fields.filter(fd => WriteStats.statable(fd.dataType)).map(_.name).toSeq
       val (dCount: Long, bounds: Seq[Bound]) = d0 match {
         case None => (0L, Seq.empty[Bound])
         case Some(dd) =>
@@ -1472,7 +1517,7 @@ object SnapshotTable {
         // the insert leg's row count rides the written total (below):
         // written = kept + iSide rows, so the conflict check needs no
         // kept.count() job of its own — the rewrite's own writeData pass
-        // (whose stats scan counts rows anyway) supplies it.
+        // (whose write-time stats count rows anyway) supplies it.
         val iCount = iSide.map(_.count()).getOrElse(0L)
         val out = (kept.toSeq ++ iSide.toSeq).reduceOption(_ unionByName _)
         val (newDirs, newStats, written, writtenRel) = out match {
@@ -1639,10 +1684,13 @@ object SnapshotTable {
     * retry briefly (the winner's write+close is milliseconds away) before
     * concluding the manifest is genuinely unreadable. Observed for real:
     * the concurrent-append stress spec hit the empty-read without this. */
-  private[graft] def readManifest(spark: SparkSession, root: String, v: Int): Commit = {
+  private[graft] def readManifest(spark: SparkSession, root: String, v: Int): Commit =
+    retryInFlight(v)(readManifestOnce(spark, root, v))
+
+  private def retryInFlight(v: Int)(read: => Commit): Commit = {
     var attempt = 0
     while (true) {
-      try return readManifestOnce(spark, root, v)
+      try return read
       catch {
         case e: Exception if !e.isInstanceOf[java.io.FileNotFoundException] =>
           attempt += 1
@@ -1770,45 +1818,22 @@ object SnapshotTable {
   // or unclustered values, on strings past the 64-char stat cap, and on any
   // column the clustering key doesn't order. Each file therefore also
   // carries a small per-column Bloom filter (m=4096 bits, k=4 via double
-  // hashing murmur3+xxhash64), built inside the SAME post-write stats
-  // aggregation (4 `collect_set(pmod(...))` expressions per column — each
-  // set is ≤4096 small ints, manifest-metadata-sized) and consulted by
-  // [[prunePlan]] whenever a [[Bound]] is an EQUALITY (lower == upper): a
-  // probe position with an unset bit proves the value absent from the file.
-  // False positives only cost a read; false negatives are impossible, so
-  // skipping stays exact. ~2k distinct values per file per column before
-  // saturation (fpp ≈ (1-e^{-kn/m})^k); a saturated bloom prunes nothing
-  // and is merely dead weight — the production note for 128MB files is a
-  // larger m in a sidecar, the JSON manifest keeps the index self-contained
-  // here.
-  private val BloomBits = 4096
-  private val BloomK = 4
+  // hashing murmur3+xxhash64), built by the file's WRITER from the rows it
+  // writes ([[WriteStats]], the same kernel as the min/max stats) and
+  // consulted by [[prunePlan]] whenever a [[Bound]] is an EQUALITY
+  // (lower == upper): a probe position with an unset bit proves the value
+  // absent from the file. False positives only cost a read; false
+  // negatives are impossible, so skipping stays exact. ~2k distinct values
+  // per file per column before saturation (fpp ≈ (1-e^{-kn/m})^k); a
+  // saturated bloom prunes nothing and is merely dead weight — the
+  // production note for 128MB files is a larger m in a sidecar, the JSON
+  // manifest keeps the index self-contained here.
 
-  /** Column types we bloom: equality-meaningful, hash-stable. */
-  private def bloomable(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType | ByteType | ShortType | IntegerType | LongType | DateType => true
-      case _ => false
-    }
-  }
-
-  /** The k probe positions of one value, write side (Column) — MUST stay
-    * arithmetic-identical to [[probePositions]]. h2 is forced odd so the
-    * double-hash stride never collapses; all operands stay small, ANSI-safe. */
-  private def bloomPosCols(c: org.apache.spark.sql.Column): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.{hash, lit, pmod, when, xxhash64}
-    val h1 = pmod(hash(c).cast("long"), lit(BloomBits.toLong))
-    val h2 = pmod(xxhash64(c), lit(BloomBits.toLong)) * 2 + 1
-    (0 until BloomK).map(i => when(c.isNotNull, pmod(h1 + lit(i.toLong) * h2, lit(BloomBits.toLong)).cast("int")))
-  }
-
-  /** The k probe positions of one literal, read side — evaluates the same
-    * murmur3(seed 42) / xxhash64(seed 42) Spark uses for `hash()` on the
-    * column-typed value. None when the value can't be represented in the
-    * column's type (never prune). */
+  /** The k probe positions of one literal, read side — the write side's
+    * [[WriteStats.bloomPositions]] on the column-typed value. None when
+    * the value can't be represented in the column's type (never prune). */
   private def probePositions(dt: org.apache.spark.sql.types.DataType, v: Any): Option[Seq[Int]] = {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, Murmur3Hash, XxHash64}
+    import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.types._
     val typedOpt: Option[Any] = (dt, v) match {
       case (StringType, s: String) => Some(s)
@@ -1821,18 +1846,11 @@ object SnapshotTable {
         scala.util.Try(java.sql.Date.valueOf(s)).toOption
       case _ => None
     }
-    typedOpt.map { typed =>
-      val lit = Literal.create(typed, dt)
-      val h1raw = new Murmur3Hash(Seq(lit)).eval(null).asInstanceOf[Int].toLong
-      val h2raw = new XxHash64(Seq(lit)).eval(null).asInstanceOf[Long]
-      val h1 = java.lang.Math.floorMod(h1raw, BloomBits.toLong)
-      val h2 = java.lang.Math.floorMod(h2raw, BloomBits.toLong) * 2 + 1
-      (0 until BloomK).map(i => java.lang.Math.floorMod(h1 + i.toLong * h2, BloomBits.toLong).toInt)
-    }
+    typedOpt.map(typed => WriteStats.bloomPositions(dt, Literal.create(typed, dt).value).toSeq)
   }
 
   private def bloomEncode(bits: scala.collection.BitSet): String = {
-    val bytes = new Array[Byte](BloomBits / 8)
+    val bytes = new Array[Byte](WriteStats.BloomBits / 8)
     bits.foreach(b => bytes(b >> 3) = (bytes(b >> 3) | (1 << (b & 7))).toByte)
     java.util.Base64.getEncoder.encodeToString(bytes)
   }
@@ -1842,21 +1860,9 @@ object SnapshotTable {
     (bytes(pos >> 3) & (1 << (pos & 7))) != 0
   }
 
-  /** Orderable atomic types we record min/max for. */
-  private def statable(dt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-          StringType | DateType | TimestampType | TimestampNTZType | BooleanType =>
-        true
-      case _: DecimalType => true
-      case _ => false
-    }
-  }
-
   /** Encode one collected min/max cell as manifest JSON. None = no stat
     * (null, non-finite double, overlong string) — always safe to omit. */
-  private def statJson(dt: org.apache.spark.sql.types.DataType, v: Any): Option[JValue] = {
+  private[graft] def statJson(dt: org.apache.spark.sql.types.DataType, v: Any): Option[JValue] = {
     import org.apache.spark.sql.types._
     if (v == null) None
     else
@@ -1886,24 +1892,20 @@ object SnapshotTable {
       }
   }
 
-  /** Write `df` to a fresh data dir and return (relative dir, row count,
-    * per-file stats). The post-write validation scan the commit protocol
-    * already paid for the row count now ALSO yields the skipping index:
-    * one `groupBy(input_file_name())` agg computes count + min/max of every
-    * orderable column per file — zero extra passes, and the collected rows
-    * are file-count-sized (manifest metadata, same order as `dirs`). */
   final class ConstraintViolationException(val name: String, val violations: Long)
       extends RuntimeException(
         s"CHECK constraint '$name' violated by $violations row(s); nothing was committed")
 
-  /** Enforcement rides the SAME post-write validation aggregation as the
-    * stats: each CHECK contributes one conditional count per file — zero
-    * extra passes. A violation aborts BEFORE publish (the orphaned dir is
-    * reclaimed by [[vacuum]]), so constraint failures can never tear the
-    * table: rows either all satisfy every CHECK or none land. Null CHECK
-    * results count as violations (a CHECK must prove itself), matching
-    * the SQL-standard `CHECK` on an unknown being Delta's strict reading
-    * for data-quality gates. */
+  /** Write `df` to a fresh data dir and return (relative dir, row count,
+    * per-file stats) — ONE Spark job: the write itself builds every
+    * file's [[FileStat]] (rows, min/max, non-null counts, blooms) and each
+    * CHECK constraint's violation count from the rows as they are written
+    * ([[FileStatsJobTracker]]), so nothing re-reads the files for the
+    * manifest. A violation aborts BEFORE publish (the dir is deleted), so
+    * constraint failures can never tear the table: rows either all
+    * satisfy every CHECK or none land. Null CHECK results count as
+    * violations (a CHECK must prove itself), Delta's strict reading for
+    * data-quality gates. */
   private def writeData(
       spark: SparkSession,
       root: String,
@@ -1918,138 +1920,63 @@ object SnapshotTable {
     val physDf = physicalOf.foldLeft(df) { case (d, (logical, physical)) =>
       if (d.columns.contains(logical)) d.withColumnRenamed(logical, physical) else d
     }
-    physDf.write.parquet(abs)
-    val (n, stats) = scanStats(
-      spark,
-      root,
-      rel,
-      org.apache.spark.sql.types.StructType(physDf.schema.fields.map(_.copy(nullable = true))),
-      constraints,
-      physicalOf)
-    (rel, n, stats)
-  }
-
-  /** The post-write validation/stats scan over an ALREADY-WRITTEN data dir
-    * (`rel`, physical column names, `physSchema`): one
-    * `groupBy(input_file_name())` aggregation yields row counts, min/max,
-    * non-null counts, per-file blooms, and every CHECK constraint's
-    * violation count — zero extra passes. Shared by [[writeData]] (which
-    * wrote the dir a moment ago) and the streaming sink's staged-rename
-    * fast path (whose files the EXECUTORS wrote — renaming them here saves
-    * the second full write of every micro-batch). A constraint violation
-    * deletes the dir and aborts pre-publish, exactly as before. */
-  private def scanStats(
-      spark: SparkSession,
-      root: String,
-      rel: String,
-      physSchema: org.apache.spark.sql.types.StructType,
-      constraints: Map[String, String],
-      physicalOf: Map[String, String]): (Long, Seq[FileStat]) = {
-    import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
-    val abs = new Path(dataRoot(root), rel).toString
-    // explicit schema (the frame just written): skips the footer-inference
-    // job spark.read.parquet would otherwise run before the stats scan —
-    // one fewer Spark job on EVERY commit of the protocol
-    val written = spark.read
-      .schema(physSchema)
-      .parquet(abs)
-    import org.apache.spark.sql.functions.bitmap_construct_agg
-    val statFields = written.schema.fields.filter(f => statable(f.dataType)).toSeq
-    val bloomFields = written.schema.fields.filter(f => bloomable(f.dataType)).toSeq
-    def q(n: String) = col("`" + n + "`")
-    // CHECK constraints are authored in LOGICAL names; the written frame
-    // carries physical ones. Alias the logical names alongside so the
-    // stats (physical) and the constraint sums (logical) run in the SAME
-    // single aggregation pass.
-    val aggInput = physicalOf.foldLeft(written) { case (d, (logical, physical)) =>
-      if (d.columns.contains(physical)) d.withColumn(logical, q(physical)) else d
-    }
-    val aggs = count(lit(1)).as("__rows") +:
-      (statFields.flatMap(f =>
-        Seq(
-          min(q(f.name)).as("__min_" + f.name),
-          max(q(f.name)).as("__max_" + f.name),
-          count(q(f.name)).as("__nn_" + f.name))) ++ // non-null count: min/max ignore nulls, so containment proofs need it
-        // fixed-size bitmap aggregation (one 4 KiB (32768-bit) buffer per probe, bit
-        // layout bytes[pos/8] |= 1 << (pos%8) — verified identical to
-        // [[bloomEncode]]): replaces collect_set's per-row hash-set insert
-        // with a single bit set, the dominant per-row cost of this scan
-        bloomFields.flatMap(f =>
-          bloomPosCols(q(f.name)).zipWithIndex.map { case (pc, i) =>
-            bitmap_construct_agg(pc.cast("long")).as(s"__bl${i}_" + f.name)
-          }) ++
-        constraints.toSeq.sortBy(_._1).zipWithIndex.map { case ((_, check), i) =>
-          import org.apache.spark.sql.functions.{coalesce, expr, sum, when}
-          sum(when(!coalesce(expr(check), lit(false)), 1L).otherwise(0L)).as(s"__ck$i")
-        })
-    val perFile = aggInput
-      .groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .toSeq
-    constraints.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((name, _), i) =>
-      val bad = perFile.map(_.getAs[Long](s"__ck$i")).sum
+    val layout = WriteStats.Layout(physDf.schema)
+    val checks = constraints.toSeq.sortBy(_._1)
+    val tracker = new FileStatsJobTracker(
+      layout,
+      WriteStats.violationPredicates(spark, physDf.schema, physicalOf, checks.map(_._2)))
+    org.apache.spark.sql.GraftSqlBridge.writeParquet(physDf, abs, tracker)
+    checks.zip(tracker.violationCounts).foreach { case ((name, _), bad) =>
       if (bad > 0) {
         fs(spark, root).delete(new Path(abs), true) // abort pre-publish: no orphan lingers
         throw new ConstraintViolationException(name, bad)
       }
     }
-    val stats = perFile.map { r =>
-      val uri = r.getAs[String]("__file")
-      val idx = uri.indexOf(rel)
-      val path = if (idx >= 0) uri.substring(idx) else rel + "/" + uri.substring(uri.lastIndexOf('/') + 1)
-      val mins = statFields.flatMap { f =>
-        val mi = statJson(f.dataType, r.getAs[Any]("__min_" + f.name))
-        val ma = statJson(f.dataType, r.getAs[Any]("__max_" + f.name))
-        // record only complete [min,max] pairs — a one-sided bound can't prune safely here
-        if (mi.isDefined && ma.isDefined) Some(f.name -> mi.get) else None
-      }.toMap
-      val maxs = statFields.flatMap { f =>
-        val mi = statJson(f.dataType, r.getAs[Any]("__min_" + f.name))
-        val ma = statJson(f.dataType, r.getAs[Any]("__max_" + f.name))
-        if (mi.isDefined && ma.isDefined) Some(f.name -> ma.get) else None
-      }.toMap
-      val nns = statFields.map(f => f.name -> r.getAs[Long]("__nn_" + f.name)).toMap
-      val blooms = bloomFields.map { f =>
-        // OR the k probe bitmaps' first m/8 bytes (positions < m, so the
-        // 4 KiB (32768-bit) agg buffers are zero past byte 511) — byte-identical to
-        // the former bloomEncode(BitSet(positions)) string
-        val bytes = new Array[Byte](BloomBits / 8)
-        (0 until BloomK).foreach { i =>
-          val b = r.getAs[Array[Byte]](s"__bl${i}_" + f.name)
-          if (b != null) {
-            var j = 0
-            val n = math.min(bytes.length, b.length)
-            while (j < n) { bytes(j) = (bytes(j) | b(j)).toByte; j += 1 }
-          }
-        }
-        f.name -> java.util.Base64.getEncoder.encodeToString(bytes)
-      }.toMap
-      FileStat(path, r.getAs[Long]("__rows"), mins, maxs, nns, blooms)
-    }
-    // one local listing records byte sizes: the Catalyst read path
-    // ([[SnapshotFileIndex]]) builds plan-time FileStatus rows from the
-    // manifest alone — no per-file namenode probes at 100-TB file counts
+    val stats = fileStatsOf(spark, root, rel, layout, tracker.files)
+    (rel, stats.map(_.rows).sum, stats)
+  }
+
+  /** The manifest [[FileStat]]s of the files in data dir `rel` from their
+    * writers' [[RawFileStat]]s. One listing of the dir records byte
+    * sizes: the Catalyst read path ([[SnapshotFileIndex]]) builds
+    * plan-time FileStatus rows from the manifest alone — no per-file
+    * namenode probes at 100-TB file counts. A ZERO-ROW file (an empty
+    * CREATE's schema seed) gets a rows=0 entry, so its dir still reads as
+    * covered; the scan paths drop rows=0 files unconditionally. */
+  private def fileStatsOf(
+      spark: SparkSession,
+      root: String,
+      rel: String,
+      layout: WriteStats.Layout,
+      raw: Seq[RawFileStat]): Seq[FileStat] = {
     val sizes = fs(spark, root)
-      .listStatus(new Path(abs))
-      .map(s => rel + "/" + s.getPath.getName -> s.getLen)
+      .listStatus(new Path(dataRoot(root), rel))
+      .map(s => s.getPath.getName -> s.getLen)
       .toMap
-    val sized = stats.map(st => st.copy(bytes = sizes.getOrElse(st.path, -1L)))
-    // ZERO-ROW part files (an empty CREATE's schema seed, an empty shuffle
-    // partition) produce no input_file_name group, so without an entry
-    // here their dir would read as uncovered — unprunable forever. Record
-    // them as rows=0 FileStats: the scan paths drop rows=0 files
-    // unconditionally, so an empty file costs zero I/O at any later read.
-    val statted = sized.map(_.path).toSet
-    val empties = sizes.keysIterator
-      .filterNot(statted)
-      .filter { p =>
-        val n = p.substring(p.lastIndexOf('/') + 1)
-        !n.startsWith("_") && !n.startsWith(".")
+    val statFields = layout.statFields
+    raw.sortBy(_.name).map { r =>
+      val path = rel + "/" + r.name
+      val bytes = sizes.getOrElse(r.name, -1L)
+      if (r.rows == 0) FileStat(path, 0L, Map.empty, Map.empty, bytes = bytes)
+      else {
+        // record only complete [min,max] pairs — a one-sided bound can't prune safely
+        val pairs = statFields.indices.flatMap { i =>
+          val dt = statFields(i).dataType
+          def json(v: Any) = Option(v).flatMap(x => statJson(dt, WriteStats.toExternal(dt, x)))
+          for (mi <- json(r.min(i)); ma <- json(r.max(i))) yield (statFields(i).name, mi, ma)
+        }
+        FileStat(
+          path,
+          r.rows,
+          pairs.map(p => p._1 -> p._2).toMap,
+          pairs.map(p => p._1 -> p._3).toMap,
+          statFields.indices.map(i => statFields(i).name -> r.nonNull(i)).toMap,
+          layout.bloomFields.indices
+            .map(i => layout.bloomFields(i).name -> java.util.Base64.getEncoder.encodeToString(r.blooms(i)))
+            .toMap,
+          bytes)
       }
-      .map(p => FileStat(p, 0L, Map.empty, Map.empty, bytes = sizes(p)))
-      .toSeq
-    (sized.map(_.rows).sum, sized ++ empties)
+    }
   }
 
   /** Write a change-capture sidecar ([[Cdc]]): `df` (LOGICAL names) lands
@@ -2569,7 +2496,10 @@ object SnapshotTable {
       root: String,
       batchId: Long,
       appId: Option[String]): Option[Int] =
-    history(spark, root)
+    // the epoch identity lives outside the files array: lite reads skip
+    // parsing every version's per-file stats and blooms
+    versions(spark, root).iterator
+      .map(v => retryInFlight(v)(readManifestLite(spark, root, v)))
       .find(c => c.batchId.contains(batchId) && c.appId == appId)
       .map(_.version)
 
@@ -2597,23 +2527,24 @@ object SnapshotTable {
 
   /** EXACTLY-ONCE streaming append of EXECUTOR-STAGED parquet files — the
     * DSv2 catalog sink's fast path: the micro-batch's bytes were already
-    * written once by the epoch's tasks ([[GraftStreamingWrite]]), so the
-    * files RENAME into a fresh table data dir (one metadata op per file on
-    * any rename-capable filesystem) and only the commit protocol's
-    * validation/stats scan reads them — saving the second full write of
-    * every micro-batch the land-as-DataFrame path paid. Falls back to
-    * [[appendBatchExactlyOnce]] whenever landing must transform rows:
-    * a declared cluster spec (epoch data must sort into it), a
-    * logical→physical column mapping (files must carry physical names),
-    * or an empty epoch (the schema-seed write). Crash safety is unchanged:
-    * a crash after the rename orphans one unreferenced data dir (vacuum
-    * reclaims it) and the restarted query re-stages its epoch from
-    * scratch; a replayed epoch short-circuits on its (appId, batchId)
+    * written once by the epoch's tasks ([[GraftStreamingWrite]]), whose
+    * writers also built each file's stats, so the files RENAME into a
+    * fresh table data dir (one metadata op per file on any rename-capable
+    * filesystem) and the manifest takes their reported stats — no Spark
+    * job at all, where the land-as-DataFrame path writes every byte a
+    * second time. Falls back to [[appendBatchExactlyOnce]] whenever
+    * landing must transform or check rows: a declared cluster spec (epoch
+    * data must sort into it), a logical→physical column mapping (files
+    * must carry physical names), CHECK constraints (the write enforces
+    * them), or an empty epoch (the schema-seed write). Crash safety is
+    * unchanged: a crash after the rename orphans one unreferenced data dir
+    * (vacuum reclaims it) and the restarted query re-stages its epoch
+    * from scratch; a replayed epoch short-circuits on its (appId, batchId)
     * before any rename. */
-  def appendStagedBatchExactlyOnce(
+  private[sinks] def appendStagedBatchExactlyOnce(
       spark: SparkSession,
       root: String,
-      staged: Seq[String],
+      staged: Seq[GraftStagedFile],
       schema: org.apache.spark.sql.types.StructType,
       batchId: Long,
       appId: Option[String] = None): Int = {
@@ -2628,9 +2559,9 @@ object SnapshotTable {
       // EMPTY epoch on an existing table with no schema delta (the trailing
       // batch every AvailableNow drain ships): the epoch needs only its
       // exactly-once (appId, batchId) marker — publishing it with the prior
-      // dirs verbatim skips the rows=0 seed-dir write + stats scan the
-      // DataFrame path pays. Schema-evolving or table-creating empty epochs
-      // still fall through (the seed write is what establishes them).
+      // dirs verbatim skips the rows=0 seed-dir write the DataFrame path
+      // pays. Schema-evolving or table-creating empty epochs still fall
+      // through (the seed write is what establishes them).
       if (staged.isEmpty && manifest0.isDefined &&
         schemaJson0.exists(j =>
           schemaFromJson(j) == schemaFromJson(
@@ -2639,11 +2570,11 @@ object SnapshotTable {
           spark, root, rel = None, n = 0L, stats = Seq.empty, dfSchema = schema,
           checks0 = checks0, batchId = batchId, appId = appId, committed = committed)
       }
-      if (staged.isEmpty || mapping0.nonEmpty || clusterCols0.nonEmpty) {
+      if (staged.isEmpty || mapping0.nonEmpty || clusterCols0.nonEmpty || checks0.nonEmpty) {
         val df =
           if (staged.isEmpty)
             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-          else spark.read.schema(schema).parquet(staged: _*)
+          else spark.read.schema(schema).parquet(staged.map(_.path): _*)
         appendBatchExactlyOnce(spark, root, df, batchId, appId)
       } else {
         val f = fs(spark, root)
@@ -2651,17 +2582,12 @@ object SnapshotTable {
         val dir = new Path(dataRoot(root), rel)
         f.mkdirs(dir)
         staged.foreach { s =>
-          val sp = new Path(s)
-          require(f.rename(sp, new Path(dir, sp.getName)), s"failed to adopt staged file $s into $rel")
+          val sp = new Path(s.path)
+          require(f.rename(sp, new Path(dir, sp.getName)), s"failed to adopt staged file ${s.path} into $rel")
         }
-        val (n, stats) = scanStats(
-          spark,
-          root,
-          rel,
-          org.apache.spark.sql.types.StructType(schema.fields.map(_.copy(nullable = true))),
-          checks0,
-          Map.empty)
-        publishEpochAppend(spark, root, Some(rel), n, stats, schema, checks0, batchId, appId, committed)
+        val stats = fileStatsOf(spark, root, rel, WriteStats.Layout(schema), staged.map(_.stats))
+        publishEpochAppend(
+          spark, root, Some(rel), stats.map(_.rows).sum, stats, schema, checks0, batchId, appId, committed)
       }
     }
   }
@@ -3670,11 +3596,14 @@ object SnapshotTable {
     }
   }
 
-  private[graft] def countPlan(spark: SparkSession, root: String, v: Int, bounds: Seq[Bound]): CountPlan = {
-    val m = readManifest(spark, root, v)
+  private[graft] def countPlan(spark: SparkSession, root: String, v: Int, bounds: Seq[Bound]): CountPlan =
+    countPlanOf(readManifest(spark, root, v), bounds)
+
+  private def countPlanOf(m: Commit, bounds: Seq[Bound]): CountPlan = {
     val schema = m.schemaJson.map(schemaFromJson)
-    val plan = prunePlan(spark, root, v, bounds)
-    val keep = m.files.filter(f => plan.keep.contains(f.path))
+    val plan = prunePlanOf(m, bounds)
+    val kept = plan.keep.toSet
+    val keep = m.files.filter(f => kept(f.path))
     // a MASKED file's recorded row count exceeds its live rows: it can
     // never contribute a metadata-only count — route it to the scan side
     val masked = maskedEntrySet(m)
@@ -3695,7 +3624,7 @@ object SnapshotTable {
   def countWhere(spark: SparkSession, root: String, bounds: Seq[Bound]): Long = {
     val v = latestVersion(spark, root).getOrElse(sys.error(s"no snapshot table at $root"))
     val m = readManifest(spark, root, v)
-    val plan = countPlan(spark, root, v, bounds)
+    val plan = countPlanOf(m, bounds)
     val scanned =
       if (plan.scanPaths.isEmpty) 0L
       else {
@@ -4210,7 +4139,7 @@ object SnapshotTable {
     def readAs(paths: Seq[String]): DataFrame =
       readTablePaths(spark, priorSchema, paths.map(p => new Path(dataRoot(root), p).toString))
     // stage 1: envelope prune (zero I/O; min/max ignore null keys)
-    val bounds = keyEnvelope(srcDf, keyCols)
+    val bounds = statsEnvelope(srcStats, srcSchema, keyCols).getOrElse(keyEnvelope(srcDf, keyCols))
     val allKeysNull = bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)
     // all-null source keys match nothing, but pre-stats dirs must still be
     // CARRIED (an invented empty uncovered set would silently drop them
@@ -5100,7 +5029,7 @@ object SnapshotTable {
       schemaFromJson(evolved).fields.filter(f => source.columns.contains(f.name)))
     val srcDf = readTablePaths(spark, Some(srcSchema), Seq(new Path(dataRoot(root), srcRel).toString))
     // envelope prune: the only target-side work, and it is zero-I/O
-    val bounds = keyEnvelope(srcDf, keyCols)
+    val bounds = statsEnvelope(srcStats, srcSchema, keyCols).getOrElse(keyEnvelope(srcDf, keyCols))
     val allKeysNull = bounds.forall(b => b.lower.isEmpty && b.upper.isEmpty)
     val newMask: Seq[Mask] =
       if (allKeysNull) Seq.empty // all-null keys match nothing: a pure insert
@@ -5893,8 +5822,8 @@ object SnapshotTable {
     * validated first — one scan, constraint-add is refused if any row
     * violates (the Delta ALTER TABLE ADD CONSTRAINT contract) — then every
     * future data-adding commit (create/append/overwrite, exactly-once
-    * epochs, UPDATE rewrites, MERGE sources) enforces it inside the
-    * post-write stats aggregation at zero extra passes; violations abort
+    * epochs, UPDATE rewrites, MERGE sources) enforces it inside the write
+    * job itself, from the rows as they are written; violations abort
     * pre-publish, so a bad batch can never tear the table. Constraints are
     * table properties: they survive overwrite and compaction. */
   def addCheck(spark: SparkSession, root: String, name: String, checkSql: String): Int = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Minimal bridge into package-private Spark SQL internals — the standard
   * pattern for third-party Catalyst extension libraries (native Expressions
-  * need a way to become user-facing Columns). Kept to three one-liners so
+  * need a way to become user-facing Columns). Kept to a few small helpers so
   * the internal surface touched is as small as possible.
   */
 object GraftSqlBridge {
@@ -38,6 +38,40 @@ object GraftSqlBridge {
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+
+  /** Write `df` as parquet under the fresh directory `path` in ONE job
+    * through Spark's own file writer — the commit protocol, file naming
+    * and layout `df.write.parquet(path)` produces — with `tracker`
+    * observing every row as it is written. Runs as its own SQL execution
+    * ("save", like `df.write`), so listeners see it as one query. */
+  def writeParquet(
+      df: DataFrame,
+      path: String,
+      tracker: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker): Unit = {
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val session = ds.sparkSession
+    val qe = ds.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val plan = qe.executedPlan
+      val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+        session.sessionState.conf.fileCommitProtocolClass,
+        java.util.UUID.randomUUID().toString,
+        path)
+      FileFormatWriter.write(
+        session,
+        plan,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+        committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
+        session.sessionState.newHadoopConf(),
+        Seq.empty,
+        None,
+        Seq(tracker),
+        Map.empty)
+      ()
+    }
+  }
 
   /** Idempotently register a planner strategy on a live session — the
     * runtime-injection twin of SparkSessionExtensions.injectPlannerStrategy
